@@ -484,10 +484,10 @@ object FormatQueries {
       val out = s"$dir/t"
       // repartitionByRange SAMPLES its input to pick bounds, and a plain-
       // gzip GFF is unsplittable — without a cut the whole file inflates
-      // and parses twice (sampling job + shuffle job). localCheckpoint
-      // pays one in-memory copy of the 96k rows instead.
+      // and parses twice (sampling job + shuffle job). The cut pays one
+      // copy of the 96k rows instead.
       s.read.format("gff").load(s"$fx/gff-index/gencode.v38.polyAs.gff.gz")
-        .localCheckpoint()
+        .cut()
         .repartitionByRange(4, col("seqname"), col("start"))
         .sortWithinPartitions("seqname", "start")
         .write.format("gff").mode("overwrite")

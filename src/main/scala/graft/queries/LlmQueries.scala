@@ -754,12 +754,12 @@ object LlmQueries {
     // Duplicate-cluster extraction: connected components over the exact
     // near-dup pairs (the step a dedup pipeline runs after pair
     // generation, so "keep one per cluster" works when A~B~C but A!~C).
-    // Min-label propagation with a per-round lineage cut
-    // (localCheckpoint): rounds = cluster diameter, which for near-dup
-    // clusters is small; at much larger diameters swap in the
-    // alternating small-star/large-star contraction (Kiveris et al.) on
-    // the same edge DataFrame. Docs in no pair are their own implicit
-    // singleton clusters and are not emitted (same as the oracle).
+    // Min-label propagation with a per-round lineage cut: rounds =
+    // cluster diameter, which for near-dup clusters is small; at much
+    // larger diameters swap in the alternating small-star/large-star
+    // contraction (Kiveris et al.) on the same edge DataFrame. Docs in no
+    // pair are their own implicit singleton clusters and are not emitted
+    // (same as the oracle).
     "l14_dup_clusters" -> ((s, d) =>
       connectedComponents(jaccardPairs(s, d).select(col("ida"), col("idb")))
         .orderBy("doc_id")),
@@ -772,11 +772,11 @@ object LlmQueries {
       connectedComponentsStar(jaccardPairs(s, d).select(col("ida"), col("idb")))
         .orderBy("doc_id")),
 
-    // Star contraction in RELIABLE-checkpoint mode (setCheckpointDir +
-    // df.checkpoint() per round) — the fault-tolerant configuration a
-    // 100 TB CC run needs (per-round cuts survive executor loss, unlike
-    // localCheckpoint's executor-local blocks). Same recursive-CTE oracle
-    // as l14/l21: both checkpoint modes are pinned to identical clusters.
+    // Star contraction with RELIABLE per-round cuts (a parquet round-trip
+    // under a fresh dir) — the fault-tolerant configuration a 100 TB CC
+    // run needs (per-round cuts survive executor loss, unlike the local
+    // cut's executor-local blocks). Same recursive-CTE oracle as l14/l21:
+    // both cut modes are pinned to identical clusters.
     "l30_dup_clusters_ckpt" -> ((s, d) => {
       val ckpt = java.nio.file.Files.createTempDirectory("graft_cc_ckpt")
       connectedComponentsStar(jaccardPairs(s, d).select(col("ida"), col("idb")),
@@ -1834,7 +1834,7 @@ object LlmQueries {
     // set is non-empty confirms on the exact gram strings via a semi-join
     // against that (tiny near the answer) set, so a 64-bit collision —
     // a real event at 100 TB gram counts — can never inflate the answer.
-    // Token arrays are localCheckpoint'ed once and reused by every probe.
+    // Token arrays are lineage-cut once and reused by every probe.
     // Pinned by tools/pin_l50.py (independent Python Counter + binary
     // search over the same monotone predicate).
     "l50_longest_dup_span" -> ((s, d) =>
@@ -2203,7 +2203,7 @@ object LlmQueries {
           expr("(1000000 * 850) div (1000 * odeg)").as("share"))
         .groupBy(col("cited")).agg(sum(col("share")).as("in_mass"))
         .select(col("cited").as("doc_id"), col("in_mass"))
-        .cutLazy()
+        .cut(eager = false)
       for (_ <- 2 to 10) {
         mass = contrib
           .join(mass.select(col("doc_id").as("citer"), col("in_mass")),
@@ -2213,7 +2213,7 @@ object LlmQueries {
               .as("share"))
           .groupBy(col("cited")).agg(sum(col("share")).as("in_mass"))
           .select(col("cited").as("doc_id"), col("in_mass"))
-          .cutLazy()
+          .cut(eager = false)
       }
       mass.filter(col("in_mass") > 0L)
         .select(col("doc_id"), (lit(150000L) + col("in_mass")).as("pr_micros"))
@@ -2819,7 +2819,7 @@ object LlmQueries {
       val gh = gramHashes(n)
       val dupH = gh.groupBy(col("h")).agg(count(lit(1)).as("c"))
         .filter(col("c") >= 2).select(col("h")).cut()
-      // (cutLazy here measured SLOWER 3/3 interleaved windows r18 — the
+      // (a lazy cut here measured SLOWER 3/3 interleaved windows r18 — the
       // count()-materialization job beats rdd-level eager cut on none of
       // them; eager stays. l52's round cuts: same verdict 2/3.)
       !dupH.isEmpty && !gh.join(dupH, Seq("h"), "left_semi")
@@ -2888,10 +2888,10 @@ object LlmQueries {
     */
   private def bpeLearnMerges(vocab0: DataFrame, rounds: Int)
       : (DataFrame, Seq[(Int, String, Long)]) = {
-    // cutLazy: each round's rewrite materializes inside the immediately
+    // lazy cut: each round's rewrite materializes inside the immediately
     // following merge-pick action (one action per round instead of two);
-    // see CutOps.cutLazy and the r18 JobProbe note below.
-    var vocab = vocab0.cutLazy()
+    // see [[Cut.cut]] and the r18 JobProbe note below.
+    var vocab = vocab0.cut(eager = false)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
     (1 to rounds).foreach { r =>
       val best = vocab.filter(size(col("syms")) >= 2)
@@ -2924,7 +2924,7 @@ object LlmQueries {
               element_at(acc, lit(-1)) === lit(a) && x === lit(b),
             concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
             .otherwise(concat(acc, array(x)))))
-        .cutLazy()
+        .cut(eager = false)
     }
     (vocab, merges.toSeq)
   }
@@ -3072,20 +3072,6 @@ object LlmQueries {
       .select(col("ida"), col("idb"), col("j"))
   }
 
-  /** Connected components over (ida, idb) pairs: (doc_id, cluster_id)
-    * with cluster_id = the component's minimum doc_id. Min-label
-    * propagation with a per-round lineage cut: rounds = component
-    * diameter, small for near-dup clusters; at larger diameters swap in
-    * alternating small-star/large-star contraction (Kiveris et al.) on
-    * the same edge DataFrame. Docs in no pair are implicit singletons and
-    * are not emitted.
-    *
-    * `checkpointDir`: when given, per-round cuts are RELIABLE checkpoints
-    * (HDFS/object store via setCheckpointDir) so a long CC run survives
-    * executor loss — the right mode for a 100 TB corpus. When absent, the
-    * cuts are localCheckpoint (executor-local blocks): faster, fine for
-    * bench/sandbox scale, not fault-tolerant.
-    */
   /** Shared DuckDB CTE chain deriving the image dHash truth from the
     * construction (l67/l68 oracles): block grid -> cells -> bits -> hashes
     * -> bands -> `fp(ida, idb, hia, loa, hib, lob)` confirmed pairs.
@@ -3196,18 +3182,6 @@ object LlmQueries {
       |jfp AS (SELECT * FROM jpairs
       |  WHERE bit_count(xor(hia, hib)) + bit_count(xor(loa, lob)) <= 6)""".stripMargin
 
-  /** Image near-dup pairs (l67/l68): REAL PNG decode -> perceptual dHash ->
-    * 4x16-bit banded LSH candidate join -> Hamming confirm <= 6. Keyed
-    * join on (band position, band value) — never all-pairs; hashes are
-    * computed once and lineage-cut so the self-join doesn't re-decode.
-    * Same hot-bucket discipline as the text stack (minhashCandidatePairs):
-    * a degenerate band value at corpus scale (solid-color boilerplate
-    * images hash identically) would otherwise make one bucket quadratic —
-    * buckets past `maxBucket` are dropped before the pair join and counted
-    * in an accumulator, and singleton buckets never enter it. The cap does
-    * not bind at the sf0.01 gate scale (largest bucket there is ~6 docs),
-    * so the DuckDB oracle derivation is unchanged.
-    */
   /** Per-doc image dHashes + LSH bands (decode on a cores-partitioned
     * codec stage, lineage-cut) — shared by [[imagePairs]] and the ratchet
     * accounting tool (graft.tools.ImageRatchet).
@@ -3228,6 +3202,18 @@ object LlmQueries {
     }.toDF("doc_id", "hi", "lo", "bands").cut()
   }
 
+  /** Image near-dup pairs (l67/l68): REAL PNG decode -> perceptual dHash ->
+    * 4x16-bit banded LSH candidate join -> Hamming confirm <= 6. Keyed
+    * join on (band position, band value) — never all-pairs; hashes are
+    * computed once and lineage-cut so the self-join doesn't re-decode.
+    * Same hot-bucket discipline as the text stack (minhashCandidatePairs):
+    * a degenerate band value at corpus scale (solid-color boilerplate
+    * images hash identically) would otherwise make one bucket quadratic —
+    * buckets past `maxBucket` are dropped before the pair join and counted
+    * in an accumulator, and singleton buckets never enter it. The cap does
+    * not bind at the sf0.01 gate scale (largest bucket there is ~6 docs),
+    * so the DuckDB oracle derivation is unchanged.
+    */
   private[graft] def imagePairs(s: SparkSession, d: String,
       maxBucket: Int = 1000, failOnDrop: Boolean = true): DataFrame =
     bandedHashPairs(imageHashes(s, d), maxBucket, failOnDrop, maxHamming = 6,
@@ -3302,71 +3288,6 @@ object LlmQueries {
     * tiny-payload corpora can cap the codec stage below core count
     * (A/B'd at the 500k-doc ratchet in BENCH_NOTES_r16).
     */
-  /** Lineage cut honoring `spark.graft.checkpointDir` (the q64 idiom,
-    * applied pack-wide): by default a localCheckpoint — right for the
-    * single-JVM bench, where executor loss is process death anyway — but
-    * on a real cluster (dynamic allocation, spot nodes) localCheckpoint
-    * blocks die with their executor, so setting the conf to an
-    * HDFS/object-store path switches every cut in the pack to a RELIABLE
-    * checkpoint with identical results.
-    */
-  private implicit class CutOps(df: DataFrame) {
-    def cut(): DataFrame = {
-      val s = df.sparkSession
-      s.conf.getOption("spark.graft.checkpointDir") match {
-        case Some(dir) =>
-          s.sparkContext.setCheckpointDir(dir)
-          df.checkpoint()
-        case None => df.localCheckpoint()
-      }
-    }
-
-    /** Lazy lineage cut: same truncation + fault-tolerance routing as
-      * [[cut]], but materialization happens inside the NEXT action's job
-      * instead of an eager job of its own — for loop bodies whose next
-      * step is an immediate action anyway (the BPE merge pick), this
-      * halves the loop's action count, and per-ACTION driver latency is
-      * what dominates those loops (JobProbe r18: ~37 ms/action). NOT
-      * usable when an Observation must be read before the next action
-      * (the CC loops) — obs.get would wait forever on the unmaterialized
-      * cut.
-      */
-    def cutLazy(): DataFrame = {
-      val s = df.sparkSession
-      s.conf.getOption("spark.graft.checkpointDir") match {
-        case Some(dir) =>
-          s.sparkContext.setCheckpointDir(dir)
-          df.checkpoint(eager = false)
-        case None => df.localCheckpoint(eager = false)
-      }
-    }
-  }
-
-  // NOTE (measured negative, r17 opt round): persist(MEMORY_AND_DISK)
-  // before each reliable checkpoint — the textbook fix for RDD
-  // checkpointing's write-job recompute — was tried and was SLOWER 3/3
-  // interleaved windows on l30 (3.1-3.6 s -> 3.8-4.9 s). The recompute
-  // only re-runs ONE round (each round's lineage is rooted at the
-  // previous checkpoint), so it is bounded at 2x round work, while the
-  // InMemoryRelation columnar encode + cache bookkeeping cost more than
-  // that round. Reverted; do not retry without a cheaper persist path.
-
-  /** Reliable lineage cut as a parquet round-trip: ONE job computes and
-    * writes (no RDD-checkpoint second pass re-running the round), and the
-    * returned frame scans the files — the same file-backed fault-tolerance
-    * `Dataset.checkpoint` gives, without its write-job recompute (the
-    * persist workaround above measured worse; this shape avoids the
-    * double-compute at the price of a parquet encode, cheap for the
-    * all-long frames the CC loops cut).
-    */
-  private val reliableCutSeq = new java.util.concurrent.atomic.AtomicLong()
-  private def reliableParquetCut(df: DataFrame, dir: String): DataFrame = {
-    val s = df.sparkSession
-    val path = s"$dir/cut_${reliableCutSeq.incrementAndGet()}"
-    df.write.mode("error").parquet(path)
-    s.read.parquet(path)
-  }
-
   private def codecParallelism(s: SparkSession): Int = {
     val p = s.conf.getOption("spark.graft.codec.parallelism").map(_.toInt)
       .getOrElse(s.sparkContext.defaultParallelism)
@@ -3386,17 +3307,27 @@ object LlmQueries {
   private def lshFailOnDrop(s: SparkSession): Boolean =
     s.conf.getOption("spark.graft.lsh.failOnDrop").forall(_.toBoolean)
 
+  /** Connected components over (ida, idb) pairs: (doc_id, cluster_id)
+    * with cluster_id = the component's minimum doc_id. Min-label
+    * propagation with a per-round lineage cut: rounds = component
+    * diameter, small for near-dup clusters; at larger diameters swap in
+    * alternating small-star/large-star contraction (Kiveris et al.) on
+    * the same edge DataFrame. Docs in no pair are implicit singletons and
+    * are not emitted.
+    *
+    * `checkpointDir`: the reliable-mode directory of every per-round
+    * [[Cut.cut]], so a long CC run survives executor loss — the right mode
+    * for a 100 TB corpus. When absent, `spark.graft.checkpointDir` decides,
+    * and without it the cuts are executor-local: faster, fine for
+    * bench/sandbox scale, not fault-tolerant.
+    */
   def connectedComponents(pairs: DataFrame, maxRounds: Int = 25,
       checkpointDir: Option[String] = None): DataFrame = {
-    checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
-    def cut(df: DataFrame): DataFrame = checkpointDir match {
-      case Some(dir) => reliableParquetCut(df, dir)
-      case None => df.cut()
-    }
-    val edges = cut(pairs.select(col("ida").as("src"), col("idb").as("dst"))
-      .unionAll(pairs.select(col("idb").as("src"), col("ida").as("dst"))))
-    var labels = cut(edges.select(col("src").as("doc_id")).distinct()
-      .withColumn("label", col("doc_id")))
+    val edges = pairs.select(col("ida").as("src"), col("idb").as("dst"))
+      .unionAll(pairs.select(col("idb").as("src"), col("ida").as("dst")))
+      .cut(dir = checkpointDir)
+    var labels = edges.select(col("src").as("doc_id")).distinct()
+      .withColumn("label", col("doc_id")).cut(dir = checkpointDir)
     var converged = false
     var iter = 0
     // Semi-naive ("delta-frontier") min propagation: round k joins edges
@@ -3404,24 +3335,27 @@ object LlmQueries {
     // An unchanged neighbor v already pushed cur(v) to every neighbor in
     // the round after v's last change, so dropping it from the join leaves
     // every per-round label state bit-identical to the full join (standard
-    // semi-naive evaluation; PropagationFrontierSpec pins round-by-round
-    // equality, LshCapSpec pins the final clusters against star
-    // contraction). Once the observed frontier row count is small the
-    // edges join flips to an explicit broadcast — late rounds scan the
-    // edge cut map-side instead of shuffling |E|+|V| rows per round
-    // (guide §3.1; at 100 TB the frontier collapses after the first
-    // rounds while |E| does not). The changed-count rides the cut's
-    // materialization job via observe() and doubles as the convergence
-    // test: 0 changes is exactly the old unchanged-label-sum fixpoint,
-    // detected on the same round.
-    val bcastFrontierRows =
-      pairs.sparkSession.conf.getOption("spark.graft.cc.broadcastFrontierRows")
-        .map(_.toLong).getOrElse(1000000L)
+    // semi-naive evaluation). That per-round invariant is argued, not
+    // tested; LshCapSpec pins the final clusters: union-find equality on
+    // both the broadcast and the shuffle frontier arm, the 20-edge chain,
+    // and star contraction == propagation. Once the frontier fits Spark's
+    // own auto-broadcast threshold (observed rows x 24 B, the UnsafeRow of
+    // two longs; never when the threshold is negative) the edges join
+    // flips to an explicit broadcast — late rounds scan the edge cut
+    // map-side instead of shuffling |E|+|V| rows per round (guide §3.1;
+    // at 100 TB the frontier collapses after the first rounds while |E|
+    // does not). The changed-count rides the cut's materialization job
+    // via observe() and doubles as the convergence test: 0 changes is
+    // exactly the old unchanged-label-sum fixpoint, detected on the same
+    // round.
+    val bcastBytes = pairs.sparkSession
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.autoBroadcastJoinThreshold
     var frontier = labels.select(col("doc_id").as("dst"), col("label").as("nl"))
     var frontierRows = Long.MaxValue // round-1 frontier is the full label set
     while (!converged && iter < maxRounds) {
-      val fr =
-        if (frontierRows <= bcastFrontierRows) broadcast(frontier) else frontier
+      val fr = if (bcastBytes >= 0 && frontierRows <= bcastBytes / 24)
+        broadcast(frontier) else frontier
       // The round keeps r17's ONE-exchange union+groupBy shape (a left
       // join against a separately aggregated prop measured WORSE at sf0.1
       // — extra exchange + join stage per round); the delta is only WHAT
@@ -3431,7 +3365,7 @@ object LlmQueries {
         .select(col("src").as("doc_id"), col("nl").as("label"),
           lit(false).as("old"))
       val obs = org.apache.spark.sql.Observation()
-      val next = cut(labels
+      val next = labels
         .select(col("doc_id"), col("label"), lit(true).as("old"))
         .unionAll(prop)
         .groupBy("doc_id").agg(min(col("label")).as("label"),
@@ -3439,7 +3373,8 @@ object LlmQueries {
         // every doc_id has exactly one `old` row, so lold is its previous
         // label and never null
         .select(col("doc_id"), col("label"), (col("label") < col("lold")).as("chg"))
-        .observe(obs, sum(when(col("chg"), 1L).otherwise(0L)).as("nchg")))
+        .observe(obs, sum(when(col("chg"), 1L).otherwise(0L)).as("nchg"))
+        .cut(dir = checkpointDir)
       // nchg is null iff there are no labels at all (empty pairs input):
       // nothing can ever change, so that is converged too
       val n = obs.get("nchg")
@@ -3452,6 +3387,33 @@ object LlmQueries {
     }
     require(converged, s"label propagation did not converge in $iter rounds")
     labels.select(col("doc_id"), col("label").as("cluster_id"))
+  }
+
+  /** One star-contraction half-round. Each star used to be a groupBy(u) +
+    * join back on u — two exchanges of the edge list per star plus the join
+    * itself. min() OVER (PARTITION BY u) attaches the same per-u minimum in
+    * ONE exchange (guide §2.4: two operations keyed the same way share one
+    * partitioning), and large-star's trailing distinct is dropped because
+    * small-star's final distinct canonicalizes the round's edge set anyway
+    * (duplicate intermediate edges change no min and no output set).
+    * 6 exchanges per round -> 3; identical results (LshCapSpec pins
+    * star == propagation).
+    */
+  private[graft] def largeStar(e: DataFrame): DataFrame = {
+    val nbrs = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
+    val w = Window.partitionBy(col("u"))
+    nbrs.withColumn("m", least(min(col("v")).over(w), col("u")))
+      .filter(col("v") > col("u"))
+      .select(col("v").as("u"), col("m").as("v"))
+      .filter(col("u") =!= col("v"))
+  }
+  private[graft] def smallStar(e: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("u"))
+    val withM = e.withColumn("m", min(col("v")).over(w))
+    withM.select(col("u"), col("m").as("v"))
+      .unionAll(withM.filter(col("v") =!= col("m"))
+        .select(col("v").as("u"), col("m").as("v")))
+      .filter(col("u") =!= col("v")).distinct()
   }
 
   /** Connected components by alternating large-star / small-star
@@ -3473,47 +3435,14 @@ object LlmQueries {
     * (node -> component minimum), so labels fall out directly; roots
     * label themselves, matching [[connectedComponents]] exactly.
     */
-  /** One star-contraction half-round. Each star used to be a groupBy(u) +
-    * join back on u — two exchanges of the edge list per star plus the join
-    * itself. min() OVER (PARTITION BY u) attaches the same per-u minimum in
-    * ONE exchange (guide §2.4: two operations keyed the same way share one
-    * partitioning), and large-star's trailing distinct is dropped because
-    * small-star's final distinct canonicalizes the round's edge set anyway
-    * (duplicate intermediate edges change no min and no output set).
-    * 6 exchanges per round -> 3; identical results (LshCapSpec pins
-    * star == propagation). Object-level (not nested) so the round plan can
-    * be dumped as before/after evidence (tools/StageProbe).
-    */
-  private[graft] def largeStar(e: DataFrame): DataFrame = {
-    val nbrs = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
-    val w = Window.partitionBy(col("u"))
-    nbrs.withColumn("m", least(min(col("v")).over(w), col("u")))
-      .filter(col("v") > col("u"))
-      .select(col("v").as("u"), col("m").as("v"))
-      .filter(col("u") =!= col("v"))
-  }
-  private[graft] def smallStar(e: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("u"))
-    val withM = e.withColumn("m", min(col("v")).over(w))
-    withM.select(col("u"), col("m").as("v"))
-      .unionAll(withM.filter(col("v") =!= col("m"))
-        .select(col("v").as("u"), col("m").as("v")))
-      .filter(col("u") =!= col("v")).distinct()
-  }
-
   def connectedComponentsStar(pairs: DataFrame, maxRounds: Int = 20,
       checkpointDir: Option[String] = None,
       roundsOut: Option[java.util.concurrent.atomic.AtomicInteger] = None)
       : DataFrame = {
-    checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
-    def cut(df: DataFrame): DataFrame = checkpointDir match {
-      case Some(dir) => reliableParquetCut(df, dir)
-      case None => df.cut()
-    }
-    var edges = cut(pairs
+    var edges = pairs
       .select(greatest(col("ida"), col("idb")).as("u"),
         least(col("ida"), col("idb")).as("v"))
-      .filter(col("u") =!= col("v")).distinct())
+      .filter(col("u") =!= col("v")).distinct().cut(dir = checkpointDir)
 
     var converged = false
     var iter = 0
@@ -3522,9 +3451,10 @@ object LlmQueries {
       // fixpoint signature rides the cut's materialization job (observe);
       // decimal sum: a long sum of 2^63-range hashes overflows under ANSI
       val obs = org.apache.spark.sql.Observation()
-      edges = cut(smallStar(largeStar(edges))
+      edges = smallStar(largeStar(edges))
         .observe(obs, count(lit(1)).as("n"),
-          sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")).as("h")))
+          sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")).as("h"))
+        .cut(dir = checkpointDir)
       val sig = (obs.get("n").asInstanceOf[Long],
         String.valueOf(obs.get("h").asInstanceOf[java.math.BigDecimal]))
       converged = sig._1 == 0 || prev.contains(sig)

@@ -1108,24 +1108,11 @@ object RelationalQueries {
       // join) otherwise each re-run the full lineitem scan + basket
       // shuffle — at sf1 that tripled the heaviest stage and its rep
       // variance (memory pressure from three concurrent basket builds).
-      // Materialization mode is a CONSCIOUS choice (same idiom as l30's
-      // star contraction): localCheckpoint blocks live only on executors
-      // with no lineage, so on a real cluster (dynamic allocation, spot
-      // nodes) an executor loss makes the baskets unrecoverable — set
-      // spark.graft.checkpointDir to an HDFS/object-store path there and
-      // the cut becomes a RELIABLE checkpoint instead. Default stays
-      // localCheckpoint for the single-JVM bench, where executor loss is
-      // process death anyway and the reliable write would only add IO.
-      val basketsLineage = lineitem(s, d)
+      // spark.graft.checkpointDir picks the cut's mode (see [[Cut.cut]]).
+      val baskets = lineitem(s, d)
         .groupBy(col("l_orderkey"))
         .agg(collect_set(col("l_partkey")).as("parts"))
-      val ckptDir = s.conf.getOption("spark.graft.checkpointDir")
-      val baskets = ckptDir match {
-        case Some(dir) =>
-          s.sparkContext.setCheckpointDir(dir)
-          basketsLineage.checkpoint()
-        case None => basketsLineage.localCheckpoint()
-      }
+        .cut()
       // overflow count + kept-order total in ONE scalar aggregate (one
       // 1-row broadcast instead of two, one fewer basket recomputation)
       val totOvf = baskets.agg(

@@ -375,7 +375,7 @@ object StreamQueries {
         .filter(size(col("w")) >= 3)
         .select(col("doc_id"), explode(expr(shingleExpr)).as("sh"))
       val evalSh = batchPosts.filter(col("doc_id") % 97 === 0)
-        .select(col("sh")).distinct().localCheckpoint()
+        .select(col("sh")).distinct().cut()
       val mBits = LlmQueries.bloomBits(evalSh.count())
       // bounded collect: the probe set is <= 40 rows by construction
       val probeDocs = Tables.documents(s, d)

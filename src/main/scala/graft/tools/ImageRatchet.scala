@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
+import graft.queries.Cut
 
 /** Image near-dup pipeline ratchet with mechanical drop accounting.
   *
@@ -53,7 +54,7 @@ object ImageRatchet {
       val p = graft.queries.LlmQueries
         .bandedHashPairs(hashes, maxBucket, failOnDrop = false,
           maxHamming = 6, what = "image dHash")
-        .localCheckpoint()
+        .cut()
       p.count()
       p
     }

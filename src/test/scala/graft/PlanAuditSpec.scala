@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.RelationalQueries
-import scala.jdk.CollectionConverters._
 
 /** Plan-quality assertions: pushdown must reach the scans. */
 class PlanAuditSpec extends AnyFunSuite with SharedSpark {
@@ -777,28 +776,6 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark {
     assert("Scan ExistingRDD".r.findAllIn(finalPlan).nonEmpty, finalPlan)
   }
 
-  test("q64: spark.graft.checkpointDir switches the cut to a reliable checkpoint") {
-    // Cluster mode: localCheckpoint blocks die with an executor; with the
-    // conf set the cut must become a RELIABLE checkpoint (recoverable from
-    // the checkpoint dir) with identical results.
-    val dir = java.nio.file.Files.createTempDirectory("graft_q64_ckpt")
-    val expected = RelationalQueries.queries("q64_part_cooccurrence")(spark, d)
-      .collect().map(_.toString).toSeq
-    spark.conf.set("spark.graft.checkpointDir", dir.toString)
-    try {
-      val got = RelationalQueries.queries("q64_part_cooccurrence")(spark, d)
-        .collect().map(_.toString).toSeq
-      assert(got == expected)
-      // the reliable checkpoint actually wrote RDD blocks under the dir
-      val wrote = java.nio.file.Files.walk(dir).iterator().asScala
-        .exists(p => p.getFileName.toString.startsWith("part-"))
-      assert(wrote, s"no checkpoint parts written under $dir")
-    } finally {
-      spark.conf.unset("spark.graft.checkpointDir")
-      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
-    }
-  }
-
   test("l75 repetition quality: doc-keyed shuffles only, no cartesian") {
     graft.GraftSession.registerAll(spark)
     val df = graft.queries.LlmQueries.queries("l75_repetition_quality")(
@@ -866,29 +843,6 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark {
       l.contains("cid")), s"unkeyed shuffle:\n$plan")
     assert(plan.linesIterator.filter(_.contains("Window"))
       .forall(_.contains("vec_id")), plan)
-  }
-
-  test("l-pack cuts: spark.graft.checkpointDir switches every cut to reliable mode") {
-    // q64's conf now governs the whole pack (CutOps): results identical,
-    // and checkpoint parts actually land under the dir. l79 exercises a
-    // cut per Lloyd iteration; l76 cuts the eval shingle set.
-    graft.GraftSession.registerAll(spark)
-    val d = "/root/testdata/sf0.001"
-    val expected = graft.queries.LlmQueries.queries("l79_kmeans_train")(spark, d)
-      .collect().map(_.toString).toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft_lpack_ckpt")
-    spark.conf.set("spark.graft.checkpointDir", dir.toString)
-    try {
-      val got = graft.queries.LlmQueries.queries("l79_kmeans_train")(spark, d)
-        .collect().map(_.toString).toSeq
-      assert(got == expected)
-      val wrote = java.nio.file.Files.walk(dir).iterator().asScala
-        .exists(p => p.getFileName.toString.startsWith("part-"))
-      assert(wrote, s"no checkpoint parts written under $dir")
-    } finally {
-      spark.conf.unset("spark.graft.checkpointDir")
-      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
-    }
   }
 
   test("l52 kNN graph: candidates come from a keyed bucket join, no cartesian") {

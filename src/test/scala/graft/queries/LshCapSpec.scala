@@ -170,14 +170,16 @@ class LshCapSpec extends AnyFunSuite with SharedSpark {
     val gotBcast = LlmQueries.connectedComponents(pairs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(gotBcast == expect)
-    // force the shuffle-join arm for every round (frontier never small
-    // enough to broadcast): results must be identical
-    spark.conf.set("spark.graft.cc.broadcastFrontierRows", "0")
+    // force the shuffle-join arm for every round (a negative auto-broadcast
+    // threshold never broadcasts the frontier): results must be identical
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
     try {
       val gotShuffle = LlmQueries.connectedComponents(pairs)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       assert(gotShuffle == expect)
-    } finally spark.conf.unset("spark.graft.cc.broadcastFrontierRows")
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("connected components: transitivity across chained pairs, disjoint clusters") {
